@@ -7,577 +7,99 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in research_index_backend_spark/ (operators,
 functions, plans); this module is the thin registry the driver imports.
+A query is registered by defining it in a ``QUERIES`` or
+``QUERIES_EXT<n>`` dict in any module under ``plans/``, with its DuckDB
+twin under the same key in the module's ``ORACLE``/``ORACLE_EXT<n>`` dict;
+the registry discovers those dicts and refuses duplicate names and
+queries without an oracle (or the reverse).
+
+Window order: the harness checks only the first ~50 entries, so both
+dicts are ordered ``TOUCHED`` first, then every other query stalest
+first by (last round it appears in any CORRECTNESS_r*.json, name).
+Each new CORRECTNESS file rotates the window with no edit here.
 """
 
 from __future__ import annotations
 
+import importlib
+import json
 import os
+import pkgutil
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 # Harness-only split sizing (see queries._ensure_conf): the driver's
 # verify/bench runs read tiny single-file parquet that must still fan out
 # across cores. Production imports of the package never set this.
 os.environ.setdefault("RIB_TEST_SPLIT_MB", "16")
 
-from research_index_backend_spark.plans.queries import ORACLE, QUERIES  # noqa: E402
-from research_index_backend_spark.plans.queries_ext import (  # noqa: E402
-    ORACLE_EXT,
-    QUERIES_EXT,
-)
-from research_index_backend_spark.plans.queries_ext2 import (  # noqa: E402
-    ORACLE_EXT2,
-    QUERIES_EXT2,
-)
-from research_index_backend_spark.plans.queries_ext3 import (  # noqa: E402
-    ORACLE_EXT3,
-    QUERIES_EXT3,
-)
-from research_index_backend_spark.plans.queries_ext4 import (  # noqa: E402
-    ORACLE_EXT4,
-    QUERIES_EXT4,
-)
-from research_index_backend_spark.plans.queries_ext5 import (  # noqa: E402
-    ORACLE_EXT5,
-    QUERIES_EXT5,
-)
-from research_index_backend_spark.plans.queries_ext6 import (  # noqa: E402
-    ORACLE_EXT6,
-    QUERIES_EXT6,
-)
-from research_index_backend_spark.plans.queries_ext7 import (  # noqa: E402
-    ORACLE_EXT7,
-    QUERIES_EXT7,
-)
-from research_index_backend_spark.plans.queries_ext8 import (  # noqa: E402
-    ORACLE_EXT8,
-    QUERIES_EXT8,
-)
-from research_index_backend_spark.plans.queries_ext9 import (  # noqa: E402
-    ORACLE_EXT9,
-    QUERIES_EXT9,
-)
-from research_index_backend_spark.plans.queries_ext10 import (  # noqa: E402
-    ORACLE_EXT10,
-    QUERIES_EXT10,
-)
-from research_index_backend_spark.plans.queries_ext11 import (  # noqa: E402
-    ORACLE_EXT11,
-    QUERIES_EXT11,
-)
-from research_index_backend_spark.plans.queries_ext12 import (  # noqa: E402
-    ORACLE_EXT12,
-    QUERIES_EXT12,
-)
-from research_index_backend_spark.plans.queries_ext13 import (  # noqa: E402
-    ORACLE_EXT13,
-    QUERIES_EXT13,
-)
-from research_index_backend_spark.plans.queries_ext14 import (  # noqa: E402
-    ORACLE_EXT14,
-    QUERIES_EXT14,
-)
-from research_index_backend_spark.plans.queries_ext15 import (  # noqa: E402
-    ORACLE_EXT15,
-    QUERIES_EXT15,
-)
-from research_index_backend_spark.plans.queries_ext16 import (  # noqa: E402
-    ORACLE_EXT16,
-    QUERIES_EXT16,
-)
-from research_index_backend_spark.plans.queries_ext17 import (  # noqa: E402
-    ORACLE_EXT17,
-    QUERIES_EXT17,
-)
-from research_index_backend_spark.plans.queries_ext18 import (  # noqa: E402
-    ORACLE_EXT18,
-    QUERIES_EXT18,
-)
-from research_index_backend_spark.plans.queries_ext19 import (  # noqa: E402
-    ORACLE_EXT19,
-    QUERIES_EXT19,
-)
-from research_index_backend_spark.plans.queries_ext20 import (  # noqa: E402
-    ORACLE_EXT20,
-    QUERIES_EXT20,
-)
-from research_index_backend_spark.plans.queries_ext21 import (  # noqa: E402
-    ORACLE_EXT21,
-    QUERIES_EXT21,
-)
-from research_index_backend_spark.plans.queries_ext22 import (  # noqa: E402
-    ORACLE_EXT22,
-    QUERIES_EXT22,
-)
-from research_index_backend_spark.plans.queries_ext23 import (  # noqa: E402
-    ORACLE_EXT23,
-    QUERIES_EXT23,
-)
-from research_index_backend_spark.plans.queries_ext24 import (  # noqa: E402
-    ORACLE_EXT24,
-    QUERIES_EXT24,
-)
-from research_index_backend_spark.plans.queries_ext25 import (  # noqa: E402
-    ORACLE_EXT25,
-    QUERIES_EXT25,
-)
-from research_index_backend_spark.plans.queries_ext26 import (  # noqa: E402
-    ORACLE_EXT26,
-    QUERIES_EXT26,
-)
-from research_index_backend_spark.plans.queries_ext27 import (  # noqa: E402
-    ORACLE_EXT27,
-    QUERIES_EXT27,
-)
-from research_index_backend_spark.plans.queries_ext28 import (  # noqa: E402
-    ORACLE_EXT28,
-    QUERIES_EXT28,
-)
-from research_index_backend_spark.plans.queries_ext29 import (  # noqa: E402
-    ORACLE_EXT29,
-    QUERIES_EXT29,
-)
-from research_index_backend_spark.plans.queries_ext30 import (  # noqa: E402
-    ORACLE_EXT30,
-    QUERIES_EXT30,
-)
-from research_index_backend_spark.plans.queries_ext31 import (  # noqa: E402
-    ORACLE_EXT31,
-    QUERIES_EXT31,
-)
-from research_index_backend_spark.plans.queries_ext32 import (  # noqa: E402
-    ORACLE_EXT32,
-    QUERIES_EXT32,
-)
-from research_index_backend_spark.plans.queries_ext33 import (  # noqa: E402
-    ORACLE_EXT33,
-    QUERIES_EXT33,
-)
-from research_index_backend_spark.plans.queries_ext34 import (  # noqa: E402
-    ORACLE_EXT34,
-    QUERIES_EXT34,
-)
-from research_index_backend_spark.plans.queries_ext35 import (  # noqa: E402
-    ORACLE_EXT35,
-    QUERIES_EXT35,
-)
-from research_index_backend_spark.plans.queries_ext36 import (  # noqa: E402
-    ORACLE_EXT36,
-    QUERIES_EXT36,
-)
-from research_index_backend_spark.plans.queries_ext37 import (  # noqa: E402
-    ORACLE_EXT37,
-    QUERIES_EXT37,
-)
-from research_index_backend_spark.plans.queries_ext38 import (  # noqa: E402
-    ORACLE_EXT38,
-    QUERIES_EXT38,
-)
-from research_index_backend_spark.plans.queries_ext39 import (  # noqa: E402
-    ORACLE_EXT39,
-    QUERIES_EXT39,
-)
-from research_index_backend_spark.plans.queries_ext40 import (  # noqa: E402
-    ORACLE_EXT40,
-    QUERIES_EXT40,
-)
+from research_index_backend_spark import plans  # noqa: E402
+
+# Plans whose physical form changed since their last official row. They
+# lead the window so the new form is hash-checked next round; drop a
+# name once a CORRECTNESS file holds its row.
+TOUCHED = ("matryoshka_recall_report",)
+
+_REGISTRY = re.compile(r"^(QUERIES|ORACLE)(_EXT\d*)?$")
+_CORRECTNESS = re.compile(r"^CORRECTNESS_r(\d+)\.json$")
+
+
+def _discover() -> tuple[dict, dict]:
+    found: dict[str, dict] = {"QUERIES": {}, "ORACLE": {}}
+    for info in pkgutil.iter_modules(plans.__path__):
+        mod = importlib.import_module(f"{plans.__name__}.{info.name}")
+        for attr, table in vars(mod).items():
+            m = _REGISTRY.match(attr)
+            if m is None:
+                continue
+            merged = found[m.group(1)]
+            dup = sorted(merged.keys() & table.keys())
+            if dup:
+                raise ValueError(
+                    f"{info.name}.{attr} defines names already registered: "
+                    f"{dup}")
+            merged.update(table)
+    qs, orc = found["QUERIES"], found["ORACLE"]
+    if qs.keys() != orc.keys():
+        raise ValueError(
+            f"queries without oracle: {sorted(qs.keys() - orc.keys())}; "
+            f"oracles without query: {sorted(orc.keys() - qs.keys())}")
+    return qs, orc
+
+
+def _window(names) -> tuple[str, ...]:
+    """TOUCHED, then the rest by (last CORRECTNESS round, name)."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(_ROOT):
+        m = _CORRECTNESS.match(fname)
+        if m is None:
+            continue
+        with open(os.path.join(_ROOT, fname)) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    tail = sorted(names - set(TOUCHED), key=lambda n: (last.get(n, 0), n))
+    return (*TOUCHED, *tail)
+
+
+_QUERIES, _ORACLE = _discover()
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the containment theta-join
     + anti-join tagging plan (SURVEY.md §2 J6+J7 — the reference's
     country-tagging query, create_graph.py:244-258)."""
-    return QUERIES["flagship_contains_tag"](spark, "/root/testdata/sf0.001")
-
-
-# The correctness harness verifies queries in dict order with a bounded
-# budget (observed: exactly the first 50 entries land in
-# CORRECTNESS_r{N}.json). Rotation policy (round-7 ADVICE item 1;
-# round-11 VERDICT "Next round" items 1+6): the catalog is FROZEN at
-# 315. r10 cleared the first 50 alphabetical never-checked queries,
-# r11 the next 50; the r12 window is the FINAL 22 never-checked
-# (spearman_corr .. wow_delta_report, all 22/22 PASS through the
-# identical tools/check.py oracle harness locally in both the r10 and
-# r11 close sweeps) + the 28 stalest official rows (last driver-checked
-# in round 5) -> official coverage reaches 315/315 and the window
-# becomes a rolling re-certification. Ordering rule (r13 VERDICT item
-# 1): any plan whose physical form changed in a round jumps to the
-# HEAD of the next window so its new form gets a driver-hash row
-# immediately; behind that, the tail stays stalest-first (by last
-# official CORRECTNESS round, catalog order within a round) so every
-# future 50-row window automatically refreshes the oldest records.
-_VERIFY_FIRST = (
-    # --- plans touched in r13/r14 jump the queue (r13 VERDICT item 1):
-    # driver-hash freshly changed forms first ---
-    "referential_integrity",
-    "merkle_diff",
-    "dedup_recall_report",
-    "kendall_tau_grouped",
-    "quality_filter",
-    "token_stats",
-    "graph_random_walk",
-    "ann_pq_topk",
-    "ann_pq_trained",
-    "prf_expansion",
-    "flagship_contains_tag",
-    # --- last officially checked r6 (15 queries; stalest) ---
-    "retention_cohort",
-    "rollup_report",
-    "running_total",
-    "sequence_islands",
-    "sequence_pack",
-    "sequence_pack_sharded",
-    "simhash_fp",
-    "simhash_hamming_pairs",
-    "stratified_sample",
-    "text_repetition",
-    "text_scrub",
-    "tfidf_topk",
-    "unpivot_report",
-    "weighted_sample",
-    "window_lag_delta",
-    # --- last officially checked r7 (47 queries) ---
-    "bitmap_index_join",
-    "bloom_probe",
-    "bool_agg_report",
-    "bpe_pair_stats",
-    "bpe_train",
-    "cms_heavy_hitters",
-    "containment_dedup",
-    "corr_report",
-    "cube_report",
-    "gapfill_ffill",
-    "graph_bfs_depth",
-    "graph_clustering_coeff",
-    "histogram_quantile",
-    "hll_distinct",
-    "hll_union_report",
-    "incremental_dedup",
-    "interpolate_linear",
-    "interval_overlap_join",
-    "join_cardinality_est",
-    "k_anonymity",
-    "kcore_decompose",
-    "kmeans_embed",
-    "kmv_distinct",
-    "label_prop_communities",
-    "lang_id_trigram",
-    "markov_transitions",
-    "median_mode_report",
-    "ohlc_downsample",
-    "oov_rate",
-    "pit_join",
-    "pmi_cooccur",
-    "prefix_dedup",
-    "record_linkage",
-    "sorted_neighborhood",
-    "span_dedup",
-    "spatial_core_points",
-    "table_diff",
-    "token_entropy",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "train_split_report",
-    "trend_regression",
-    "watermark_audit",
-    "zone_map_prune",
-    "zorder_layout",
-    "zscore_outliers",
-    # --- last officially checked r9 (48 queries) ---
-    "ann_recall_report",
-    "anomaly_mad",
-    "asof_tolerance",
-    "blocking_quality",
-    "bpe_encode",
-    "build_inverted_index",
-    "cascade_delete_audit",
-    "cdc_apply",
-    "crossref_enrich",
-    "embed_quantize_report",
-    "ewma_report",
-    "exact_percentile_rank",
-    "graph_jaccard_similarity",
-    "graph_motif_path",
-    "graph_motif_wedge",
-    "graph_ppr",
-    "group_topk_ties",
-    "grouping_sets_report",
-    "hard_negative_mining",
-    "ivm_update",
-    "keyset_page",
-    "l_diversity",
-    "mix_plan",
-    "pareto_frontier",
-    "pii_scrub",
-    "quality_calibration",
-    "scd2_history",
-    "schema_evolution_merge",
-    "seasonality_report",
-    "session_paths",
-    "shuffle_shard_plan",
-    "skew_report",
-    "sliding_distinct_users",
-    "table_profile",
-    "token_histogram",
-    "tpch_q10",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q22",
-    "tpch_q4",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "vocab_drift",
-    # --- last officially checked r10 (49 queries) ---
-    "ab_test_welch",
-    "acf_report",
-    "anova_f_report",
-    "association_rules",
-    "attribution_report",
-    "benford_report",
-    "bigram_lm_score",
-    "boolean_retrieval",
-    "bootstrap_ci",
-    "broadcast_advisor",
-    "c4_line_filter",
-    "chao_distinct_estimate",
-    "chi_square_report",
-    "churn_feature_labels",
-    "codec_advisor",
-    "cohens_d_report",
-    "cohort_ltv",
-    "compaction_plan",
-    "conformal_coverage_audit",
-    "conversion_lag_report",
-    "coreset_kcenter",
-    "correlated_predicates",
-    "cramers_v_report",
-    "ctfidf_topterms",
-    "curation_funnel_report",
-    "cusum_changepoint",
-    "dau_mau_stickiness",
-    "decayed_popularity",
-    "dedup_best_survivor",
-    "dedup_threshold_sweep",
-    "distribution_drift",
-    "domain_affinity_score",
-    "embedding_centroid_drift",
-    "embedding_integrity",
-    "embedding_outliers",
-    "equidepth_histogram",
-    "fd_discovery",
-    "feature_hashing_report",
-    "frequent_triples",
-    "gini_coefficient",
-    "gini_gain_report",
-    "golden_record",
-    "gopher_quality_flags",
-    "graph_assortativity",
-    "graph_sssp",
-    "grid_dbscan_core",
-    "group_kfold",
-    "harmonic_centrality_seeds",
-    "hierarchy_rollup",
-    # --- last officially checked r11 (48 queries) ---
-    "histogram_refine_median",
-    "hits_hubs_authorities",
-    "holt_forecast",
-    "hybrid_rrf_fusion",
-    "interarrival_burstiness",
-    "invoice_reconciliation",
-    "isotonic_calibration",
-    "jaccard_prefix_join",
-    "kanon_generalization_ladder",
-    "kaplan_meier",
-    "knn_label_eval",
-    "kruskal_wallis",
-    "ks_test_drift",
-    "ktruss_edges",
-    "latency_slo_report",
-    "length_bucket_batching",
-    "lift_gains_report",
-    "link_prediction_ra",
-    "loo_source_impact",
-    "mannwhitney_auc",
-    "matryoshka_recall_report",
-    "metadata_consistency",
-    "mmr_diversify",
-    "mrr_eval",
-    "mutual_knn_pairs",
-    "ndcg_eval",
-    "novelty_curve_report",
-    "odds_ratio_report",
-    "ohlc_bars",
-    "packing_efficiency_sweep",
-    "partition_advisor",
-    "phrase_search",
-    "pinball_loss_eval",
-    "postings_compression_report",
-    "qini_uplift_report",
-    "qlm_dirichlet_topk",
-    "quota_allocation",
-    "readability_report",
-    "residual_outliers",
-    "rfm_segments",
-    "rich_club_coefficient",
-    "rolling_median_7d",
-    "sax_symbolic",
-    "seasonal_anomaly_report",
-    "seasonal_naive_backtest",
-    "slo_burn_rate",
-    "snapshot_asof",
-    "source_overlap",
-    # --- last officially checked r12 (49 queries) ---
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "anti_semi_split",
-    "date_decompose",
-    "dedup_embedding",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_lsh_pairs",
-    "dedup_minhash_sigs",
-    "dedup_ngram_jaccard",
-    "doc_fingerprint",
-    "doc_winnow",
-    "dup_detect",
-    "group_top1",
-    "groupby_count_report",
-    "keep_first_dedup",
-    "multi_metric_agg",
-    "sessionize_events",
-    "similarity_join",
-    "sliding_windows",
-    "spearman_corr",
-    "split_leakage_audit",
-    "stream_drift_twin",
-    "stream_sessionize_twin",
-    "stream_topk_twin",
-    "string_clean",
-    "t_closeness",
-    "target_encode_smoothed",
-    "text_quality",
-    "textrank_keywords",
-    "theil_sen_trend",
-    "theta_range_check",
-    "tokenizer_fertility",
-    "topk_churn_report",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q16",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q9",
-    "trimmed_mean_report",
-    "unigram_surprisal",
-    "upsert_merge",
-    "upsert_update",
-    "windowed_events",
-    "winsorize_report",
-    "wow_delta_report",
-    # --- re-certified in the r13 driver window (48 queries; freshest) ---
-    "asof_join",
-    "graph_components",
-    "graph_degree",
-    "graph_pagerank",
-    "graph_two_hop",
-    "guard_empty",
-    "ingest_scorecard",
-    "initial_key_join",
-    "json_extract",
-    "max_over_keys",
-    "mint_ids",
-    "null_branch_dispatch",
-    "orcid_coalesce",
-    "resolve_cascade",
-    "skew_salted_join",
-    "slug_latlng",
-    "ann_hyperplane_topk",
-    "argmax_latest",
-    "bigram_topk",
-    "binary_meta",
-    "bm25_topk",
-    "date_functions",
-    "decontaminate_overlap",
-    "dedup_embedding_multi",
-    "dedup_survivors",
-    "derived_key_join",
-    "doc_chunk",
-    "event_funnel",
-    "existence_probe",
-    "frame_functions",
-    "full_outer_merge",
-    "graph_components_star",
-    "graph_pagerank_dangling",
-    "graph_triangles",
-    "intersect_except",
-    "limit_head",
-    "listagg_report",
-    "lm_quality_score",
-    "media_features",
-    "minhash_estimate",
-    "ntile_bucket",
-    "percentile_report",
-    "pivot_report",
-    "range_banded_join",
-    "range_frame_window",
-    "rank_suite",
-    "regex_filter",
-    "rerank_topk",
-)
-
-
-def _ordered(mapping: dict) -> dict:
-    first = {n: mapping[n] for n in _VERIFY_FIRST if n in mapping}
-    rest = {n: v for n, v in mapping.items() if n not in first}
-    return {**first, **rest}
+    return _QUERIES["flagship_contains_tag"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return _ordered({**QUERIES, **QUERIES_EXT, **QUERIES_EXT2,
-                     **QUERIES_EXT3, **QUERIES_EXT4, **QUERIES_EXT5,
-                     **QUERIES_EXT6, **QUERIES_EXT7, **QUERIES_EXT8,
-                     **QUERIES_EXT9, **QUERIES_EXT10, **QUERIES_EXT11,
-                     **QUERIES_EXT12, **QUERIES_EXT13, **QUERIES_EXT14,
-                     **QUERIES_EXT15, **QUERIES_EXT16, **QUERIES_EXT17,
-                     **QUERIES_EXT18, **QUERIES_EXT19, **QUERIES_EXT20,
-                     **QUERIES_EXT21, **QUERIES_EXT22, **QUERIES_EXT23,
-                     **QUERIES_EXT24, **QUERIES_EXT25, **QUERIES_EXT26,
-                     **QUERIES_EXT27, **QUERIES_EXT28,
-                     **QUERIES_EXT29, **QUERIES_EXT30,
-                     **QUERIES_EXT31, **QUERIES_EXT32,
-                     **QUERIES_EXT33, **QUERIES_EXT34,
-                     **QUERIES_EXT35, **QUERIES_EXT36,
-                     **QUERIES_EXT37, **QUERIES_EXT38,
-                     **QUERIES_EXT39, **QUERIES_EXT40})
+    return {n: _QUERIES[n] for n in _window(_QUERIES.keys())}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB twin for every SQL-expressible query."""
-    return _ordered({**ORACLE, **ORACLE_EXT, **ORACLE_EXT2, **ORACLE_EXT3,
-                     **ORACLE_EXT4, **ORACLE_EXT5, **ORACLE_EXT6,
-                     **ORACLE_EXT7, **ORACLE_EXT8, **ORACLE_EXT9,
-                     **ORACLE_EXT10, **ORACLE_EXT11, **ORACLE_EXT12,
-                     **ORACLE_EXT13, **ORACLE_EXT14, **ORACLE_EXT15,
-                     **ORACLE_EXT16, **ORACLE_EXT17, **ORACLE_EXT18,
-                     **ORACLE_EXT19, **ORACLE_EXT20, **ORACLE_EXT21,
-                     **ORACLE_EXT22, **ORACLE_EXT23, **ORACLE_EXT24,
-                     **ORACLE_EXT25, **ORACLE_EXT26, **ORACLE_EXT27, **ORACLE_EXT28,
-                     **ORACLE_EXT29, **ORACLE_EXT30,
-                     **ORACLE_EXT31, **ORACLE_EXT32,
-                     **ORACLE_EXT33, **ORACLE_EXT34,
-                     **ORACLE_EXT35, **ORACLE_EXT36,
-                     **ORACLE_EXT37, **ORACLE_EXT38,
-                     **ORACLE_EXT39, **ORACLE_EXT40})
+    return {n: _ORACLE[n] for n in _window(_ORACLE.keys())}

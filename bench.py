@@ -8,8 +8,9 @@ The stdout line is kept under 1900 characters (the recording harness
 retains only the last 2000 chars of stdout): queries are listed slowest
 first and the fastest entries are dropped once the line would overflow,
 with the dropped remainder summarized in queries_omitted/omitted_sec.
-Full per-query timings are always written to BENCH_FULL.json alongside
-this script.
+Full per-query timings are always written alongside this script to
+BENCH_FULL.json (the 32-core sf0.1 record) or, for any other core count
+or SF, to BENCH_FULL[_sf<sf>][_c<cpus>].json.
 
 Each query executes fully through the noop sink (format("noop")) — the
 whole plan runs, nothing is collected to the driver, so timings measure
@@ -46,11 +47,25 @@ def _sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
+def _full_record_path(sf: float, cpus: str) -> str:
+    """The bare BENCH_FULL.json name is the 32-core sf0.1 RECORD
+    (probe_10x and the noise-suspect pass read it as the steady-state
+    prior); a bench at any other SF or core count writes a suffixed file,
+    so neither a quick sf0.001 smoke run nor an 8-core run can clobber it."""
+    sf_tag = "" if sf == 0.1 else f"_sf{sf}"
+    cpus_tag = "" if cpus == "32" else f"_c{cpus}"
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        f"BENCH_FULL{sf_tag}{cpus_tag}.json")
+
+
 def main() -> int:
     from __spark_entry__ import queries
     from research_index_backend_spark.session import get_spark
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf = _sf_from_dir(SF_DIR)
+    full_path = _full_record_path(sf, cpus)
+    spark = get_spark(cpus=cpus)
     qs = queries()
 
     def run(fn):
@@ -113,16 +128,16 @@ def main() -> int:
     # GC/codegen-cache pressure and min-of-2 still reported bigram_topk
     # at 1.82s in r6 when its isolated steady state is 0.92s. A query is
     # suspect when its current best is >1.4x its own previous-run record
-    # (BENCH_FULL.json from the last bench, read before we overwrite it)
+    # (the last bench's record at the same SF and core count, read before
+    # we overwrite it)
     # — the one signal that catches BOTH samples being inflated.
     # Re-timing just the suspects (capped) buys min-of-3 where it
     # matters for ~1/10 the extra wall time of a full third pass.
     prior: dict[str, float] = {}
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json")) as fh:
+        with open(full_path) as fh:
             prev = json.load(fh)
-        if prev.get("sf") == _sf_from_dir(SF_DIR):
+        if prev.get("sf") == sf:
             prior = {n: t for n, t in prev.get("queries", {}).items()
                      if isinstance(t, (int, float)) and t > 0}
     except (OSError, ValueError):
@@ -141,19 +156,10 @@ def main() -> int:
             pass
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    sf = _sf_from_dir(SF_DIR)
 
-    # Full per-query detail, for humans and BENCH_HISTORY.md. The bare
-    # BENCH_FULL.json name is the sf0.1 RECORD (probe_10x and the
-    # noise-suspect pass read it as the steady-state prior); a bench at
-    # any other SF writes a suffixed file so a quick sf0.001 smoke run
-    # can't clobber the record.
+    # Full per-query detail, for humans and BENCH_HISTORY.md.
     full = {"metric": "total_query_sec", "value": total, "unit": "sec",
             "queries": timings, "sf": sf}
-    full_name = ("BENCH_FULL.json" if sf == 0.1
-                 else f"BENCH_FULL_sf{sf}.json")
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             full_name)
     try:
         with open(full_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)

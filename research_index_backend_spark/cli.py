@@ -101,7 +101,6 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     authors0 = _read_table(spark, data_dir, "authors")
     countries = _read_table(spark, data_dir, "countries")
     refers0 = _read_table(spark, data_dir, "refers_to")
-    author_of0 = _read_table(spark, data_dir, "author_of")
 
     # J1 existence probe against the outputs table
     tracker = (
@@ -197,8 +196,6 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
         upsert_parquet(spark, graph["refers_to"],
                        str(Path(data_dir) / "refers_to"),
                        ["output_uuid", "country_id"])
-    # author_of0 merged on disk by upsert_parquet (existing side read there)
-    _ = author_of0
 
     metrics = ingestion_metrics(full, update_metadata=update_metadata,
                                 start_time=start, end_time=time.time())

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT11: dict = {}
@@ -251,7 +252,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the bounded-set plan avoids at 100 TB.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (_SO_N - 1)),
         lambda i: F.md5(F.array_join(F.slice("toks", i, _SO_N), " ")))

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT12: dict = {}
@@ -80,7 +81,7 @@ def q_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break is an integer-padded string min_by, no window anywhere.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     base = (d.select("doc_id", "source", "lang", "n_chars",
                      toks.alias("toks"))
             .filter(F.size("toks") >= 1)
@@ -235,7 +236,7 @@ def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     hits = (d.select("doc_id", F.explode(toks.alias("toks")).alias("term"))
             .filter(F.col("term").isin(*_BR_TERMS)))
     return (hits.groupBy("doc_id")
@@ -287,7 +288,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable; output ordering is total (n desc, doc_id).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     pos = (d.select("doc_id", F.posexplode(toks.alias("toks"))
                     .alias("pos0", "term"))
            .filter(F.col("term").isin(_PS_FIRST, _PS_SECOND)))

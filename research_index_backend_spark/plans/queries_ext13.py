@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT13: dict = {}
@@ -343,7 +344,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials per partition.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     base = d.select(F.size(toks).cast("bigint").alias("n_tok"))
     base = base.select("n_tok",
                        F.expr(_lb_cap_sql("n_tok")).cast("bigint")
@@ -487,7 +488,7 @@ def q_domain_affinity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy and a TakeOrdered top-K. No windows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     postings = d.select("doc_id", "source",
                         F.explode(toks).alias("term"))
     freq = (postings.groupBy("term")

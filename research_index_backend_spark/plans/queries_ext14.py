@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT14: dict = {}
@@ -162,7 +163,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     both correct, Catalyst picks by stats.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     postings = d.select("doc_id", F.explode(toks).alias("term"))
     rarity = (postings.groupBy("term")
               .agg(F.count(F.lit(1)).alias("c"))
@@ -222,7 +223,7 @@ def q_feature_hashing_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned once and never joined.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 1),
         lambda i: F.array_join(F.slice("toks", i, 2), " "))

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.textstats import BPE_PRETOKEN_PATTERN
+from ..operators.textstats import BPE_PRETOKEN_PATTERN, whitespace_tokens
 from .queries import _t
 from .queries_ext14 import _lg_ladder_sql
 
@@ -64,8 +64,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     |languages| partial rows.
     """
     d = _t(spark, sf_dir, "documents")
-    words = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    words = F.size(whitespace_tokens(F.lower("text")))
     subtoks = F.size(F.regexp_extract_all(
         F.col("text"), F.lit(BPE_PRETOKEN_PATTERN), 0))
     chars = F.length("text") - F.regexp_count("text", F.lit(r"\s"))
@@ -137,7 +136,7 @@ def q_postings_compression_report(spark: SparkSession,
     global); band rollup is map-side combinable to <= 21 x few rows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     postings = (d.select("doc_id", F.explode(toks).alias("term"))
                 .distinct())
     wgap = Window.partitionBy("term").orderBy("doc_id")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT16: dict = {}
@@ -67,7 +68,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable groupBy per doc + TakeOrdered bottom-K.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 1),
         lambda i: F.array_join(F.slice("toks", i, 2), " "))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT19: dict = {}
@@ -49,7 +50,7 @@ def q_ctfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by source over vocab-bounded rows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     st = (d.select("source", F.explode(toks).alias("term"))
           .groupBy("source", "term")
           .agg(F.count(F.lit(1)).alias("tf")))

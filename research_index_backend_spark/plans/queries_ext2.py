@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import simhash
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 # ---------------------------------------------------------------------------
@@ -257,8 +258,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != "")).alias("tok"))
+        F.explode(whitespace_tokens(F.lower("text"))).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_docs = (tok.distinct().groupBy("tok")
                .agg(F.count(F.lit(1)).alias("df")))
@@ -318,7 +318,7 @@ def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cut is deterministic.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     # token array STAGED to a named column before the bigram HOF
     # references it per position (the novelty_curve_report
     # CollapseProject lesson; measured 0.69 -> 0.46s at sf0.1)
@@ -804,7 +804,7 @@ def q_doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 — the narrow-output discipline every text query here follows.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     with_toks = (d.select("doc_id", toks.alias("toks"))
                  .filter(F.size("toks") >= 1))
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(_CHUNK_STEP))
@@ -864,8 +864,7 @@ def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     division: exact in any engine.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(whitespace_tokens(F.lower("text")))
     w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     return (d.select("doc_id", "source", n_tok.alias("n_tokens"))
@@ -916,8 +915,7 @@ def q_sequence_pack_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed packer does at 100 TB.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(whitespace_tokens(F.lower("text")))
     base = d.select(
         "doc_id", "source", n_tok.alias("n_tokens"),
         F.floor(F.col("doc_id") / _PACK_SHARD_ROWS).alias("shard"))

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT20: dict = {}
@@ -85,7 +86,7 @@ def q_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import brute_force_topk
     d = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     tf = (d.filter(F.col("doc_id") != _RRF_QVEC)
           .select("doc_id", F.explode(toks).alias("term"))
           .filter(F.col("term").isin(*_RRF_TERMS))

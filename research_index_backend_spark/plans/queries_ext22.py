@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT22: dict = {}
@@ -430,8 +431,7 @@ def q_loo_source_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered — division guard, documented.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(whitespace_tokens(F.lower("text")))
     per = (d.select("source", toks.alias("tok"))
            .groupBy("source")
            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nk"),

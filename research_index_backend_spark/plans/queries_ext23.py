@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT23: dict = {}
@@ -79,7 +80,7 @@ def q_qlm_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses it).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     docs = (d.select("doc_id", toks.alias("toks"))
             .select("doc_id", F.size("toks").alias("dl"),
                     F.explode("toks").alias("term"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT24: dict = {}
@@ -199,8 +200,7 @@ def q_packing_efficiency_sweep(spark: SparkSession,
     combinable aggregate per L.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(whitespace_tokens(F.lower("text")))
     ladder = F.array(*[F.lit(k) for k in _PK_LADDER])
     x = (d.select(toks.alias("tok"))
          .select("tok", F.explode(ladder).alias("max_len")))

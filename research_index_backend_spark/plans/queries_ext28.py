@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT28: dict = {}
@@ -173,8 +174,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the regex split per reference (the r7 token_stats/quality_filter
     # duplicated-expression-tree lesson, 7.9x -> 5.0x there).
     tok_d = d.select(
-        F.filter(F.split(F.lower("text"), r"\s+"),
-                 lambda t: t != "").alias("toks"))
+        whitespace_tokens(F.lower("text")).alias("toks"))
     tk = F.col("toks")
     bigrams = F.when(F.size(tk) < 2, F.array().cast("array<string>")) \
         .otherwise(F.transform(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT3: dict = {}
@@ -64,7 +65,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial top-k, no global sort shuffle).
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     docs = d.select("doc_id", toks.alias("toks")) \
             .select("doc_id", F.size("toks").alias("dl"),
                     F.explode("toks").alias("term")) \
@@ -168,7 +169,7 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus: one scan, map-side join, partial-agg count.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (_DECON_N - 1)),
         lambda i: F.md5(F.array_join(F.slice("toks", i, _DECON_N), " ")))
@@ -225,7 +226,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized e6.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     grams5 = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 4),
         lambda i: F.array_join(F.slice("toks", i, 5), " "))
@@ -454,8 +455,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. Comparing ln(u)/w (monotone in u^(1/w))
     avoids pow() library differences across engines."""
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(whitespace_tokens(F.lower("text")))
     u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
                  16, 10).cast("double") + F.lit(1.0))
          / F.lit(float(16 ** 13)))
@@ -658,8 +658,7 @@ def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cand = q_bm25_topk(spark, sf_dir)
     d = _t(spark, sf_dir, "documents")
-    toks = F.array_distinct(
-        F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != ""))
+    toks = F.array_distinct(whitespace_tokens(F.lower("text")))
     qarr = F.array(*[F.lit(t) for t in _BM25_TERMS])
     scored = (d.join(F.broadcast(cand), "doc_id")
               .select(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT30: dict = {}
@@ -273,8 +274,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     is POOL^2 * K, corpus-independent.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     tf = (d.select("doc_id", F.explode(toks).alias("term"))
           .filter(F.col("term").isin(*_MMR_TERMS))
           .groupBy("doc_id")

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT36: dict = {}
@@ -72,8 +73,7 @@ def q_curation_funnel_report(spark: SparkSession,
     and drops the text; shingles are computed AT the s2 checkpoint —
     only for quality+dedup survivors — and toks dropped there."""
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     base = d.select(
         "doc_id",
         F.md5("text").alias("h"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT39: dict = {}
@@ -63,8 +64,7 @@ def q_novelty_curve_report(spark: SparkSession,
     anchor = d.agg(F.max("doc_id").alias("mx"))
     tranche = F.expr(f"least(doc_id * {_NC_TRANCHES}"
                      f" div (mx + 1), {_NC_TRANCHES - 1})")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"),
-                    lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     sh = F.when(F.size("tk") < _NC_SHINGLE,
                 F.array().cast("array<string>")) \
         .otherwise(F.transform(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.queries import PropertyGraph
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT4: dict = {}
@@ -272,7 +273,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the QUANTIZED score so the cut is engine-stable."""
     d = _t(spark, sf_dir, "documents")
     side = (F.regexp_extract("source", r"(\d+)", 1).cast("int") < 10)
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     tf = (d.select(side.alias("in_a"), F.explode(toks).alias("tok"))
           .groupBy("tok")
           .agg(F.count_if(F.col("in_a")).alias("a"),
@@ -448,8 +449,7 @@ def q_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization window is a deliberate single-partition step over a
     dim-sized frame, never over documents."""
     d = _t(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                           lambda t: t != ""))
+    toks = F.size(whitespace_tokens(F.lower("text")))
     per_src = (d.select("source", toks.alias("n_toks"))
                .groupBy("source")
                .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -499,8 +499,7 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny aggregate; floor(log2(n)) is exact on engine-identical
     IEEE doubles for the only boundary cases (powers of two)."""
     d = _t(spark, sf_dir, "documents")
-    n = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                        lambda t: t != ""))
+    n = F.size(whitespace_tokens(F.lower("text")))
     b = F.floor(F.log2(F.greatest(n, F.lit(1)))).cast("int")
     return (d.select(b.alias("bucket"), n.alias("n_toks"))
             .groupBy("bucket")
@@ -559,7 +558,7 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     base = (d.select("doc_id", toks.alias("toks"))
             .select("doc_id",
                     F.size("toks").alias("n_toks"),

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t
 
 QUERIES_EXT5: dict = {}
@@ -525,7 +526,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     counts = (d.select("doc_id", F.explode(toks).alias("term"))
               .groupBy("doc_id", "term")
               .agg(F.count(F.lit(1)).alias("c")))
@@ -912,7 +913,7 @@ def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     support-filtered) bigram side twice; top-k is TakeOrdered.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     uni = (d.select(F.explode(toks).alias("t"))
            .groupBy("t").agg(F.count(F.lit(1)).alias("c")))
     total = uni.agg(F.sum("c").alias("n_total"))
@@ -1371,7 +1372,7 @@ def q_build_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hapax tail early.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     td = (d.select("doc_id", F.explode(toks).alias("term"))
           .groupBy("term", "doc_id")
           .agg(F.count(F.lit(1)).alias("c")))

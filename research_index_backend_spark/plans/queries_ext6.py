@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t, NGRAM_DF_CAP
 
 QUERIES_EXT6: dict = {}
@@ -182,7 +183,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the sketch itself is oracle-checkable.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     counts = (d.select(F.explode(toks).alias("tok"))
               .groupBy("tok").agg(F.count(F.lit(1)).alias("n")))
     seeds = F.sequence(F.lit(0), F.lit(_CMS_D - 1))
@@ -475,7 +476,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs on both engines identically.
     """
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     n_spans = F.floor(F.size(F.col("toks")) / _SPAN_LEN).cast("int")
     spans = F.when(F.size("toks") >= _SPAN_LEN,
                    F.transform(F.sequence(F.lit(0), n_spans - 1),
@@ -714,7 +715,7 @@ def q_train_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("bigint") % 100
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     split = (F.when(h < 80, "train").when(h < 90, "valid")
              .otherwise("test"))
     return (d.select(split.alias("split"), "lang",

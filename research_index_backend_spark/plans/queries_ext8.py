@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.textstats import whitespace_tokens
 from .queries import _t, LSH_BUCKET_CAP, _oracle_minhash_cte
 
 QUERIES_EXT8: dict = {}
@@ -514,6 +515,11 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .select("vec_id", "embedding").collect())
     vecs = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
             for r in code_rows}
+    nonfinite = sorted(i for i, v in vecs.items()
+                       if not all(map(math.isfinite, v)))
+    if nonfinite:  # they would be inlined as SQL literals (e.g. nanD)
+        raise ValueError(f"ann_pq_topk: codebook vectors {nonfinite} hold "
+                         f"non-finite components")
     code_ids = sorted(vecs)           # ascending = the old tie-break order
     qids = [i for i in code_ids if i < _PQ_NQ]   # _PQ_NQ <= _PQ_CODES
     if not qids:
@@ -691,7 +697,7 @@ def q_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .queries_ext3 import _BM25_B, _BM25_K1, _BM25_TERMS
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     docs = d.select("doc_id", toks.alias("toks")) \
             .select("doc_id", F.size("toks").alias("dl"),
                     F.explode("toks").alias("term")) \
@@ -1531,7 +1537,7 @@ def q_crossref_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.crossref import titles_licenses
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")
+    toks = whitespace_tokens(F.lower("text"))
     title = F.concat_ws(" ", F.slice(toks, 1, 4))
     did = F.col("doc_id").cast("string")
     vor_s = F.struct(
@@ -1920,8 +1926,7 @@ def q_shuffle_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     story.
     """
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), r"\s+"),
-                            lambda t: t != ""))
+    n_tok = F.size(whitespace_tokens(F.lower("text")))
     shard = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
                16, 10).cast("bigint"), F.lit(_SH_N))
@@ -2831,8 +2836,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (_t(spark, sf_dir, "documents")
          .filter(F.col("doc_id") < _PJ_N))
     toks = (d.select("doc_id", F.explode(F.array_distinct(
-        F.filter(F.split(F.lower("text"), r"\s+"),
-                 lambda t: t != ""))).alias("tok")))
+        whitespace_tokens(F.lower("text")))).alias("tok")))
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = (toks.join(dfreq, "tok")
                .groupBy("doc_id")

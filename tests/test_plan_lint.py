@@ -17,8 +17,10 @@ Invariants:
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
+import os
 import re
 
 import pytest
@@ -489,6 +491,35 @@ def test_fact_scan_allowlist_is_tight(all_plans):
         f"stale FACT_SCAN_ALLOWED entries (remove or update): {stale}")
 
 
+# operators.textstats helpers that are F.split underneath
+_TOKENIZERS = {"whitespace_tokens", "word_tokens"}
+
+
+def _spark_fn_aliases(tree: ast.AST) -> tuple[set, set]:
+    """Names a module binds to pyspark.sql.functions, and names bound to
+    split-like calls: functions.split and the textstats tokenizers."""
+    f_aliases, split_names = set(), set(_TOKENIZERS)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name == "pyspark.sql.functions":
+                    f_aliases.add(a.asname or "pyspark")
+        elif isinstance(node, ast.ImportFrom):
+            if node.module == "pyspark.sql":
+                for a in node.names:
+                    if a.name == "functions":
+                        f_aliases.add(a.asname or "functions")
+            elif node.module == "pyspark.sql.functions":
+                for a in node.names:
+                    if a.name == "split":
+                        split_names.add(a.asname or "split")
+            elif (node.module or "").endswith("textstats"):
+                for a in node.names:
+                    if a.name in _TOKENIZERS:
+                        split_names.add(a.asname or a.name)
+    return f_aliases, split_names
+
+
 def test_no_split_expression_referenced_inside_hof_lambdas():
     # Higher-order-function lambdas run interpreted, and any expression
     # the lambda body references re-evaluates PER ELEMENT — a token
@@ -507,9 +538,9 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
     # multiple targets, walrus, augmented), and detects split via the
     # AST call graph — a Call whose func is `split` or `<alias>.split`
     # where the name binds pyspark.sql.functions — instead of a source
-    # substring, so aliased imports can't slip past.
-    import ast
-    import os
+    # substring, so aliased imports can't slip past. The textstats
+    # tokenizers (whitespace_tokens / word_tokens) wrap F.split, so a
+    # call to them, by any import name, counts as a split call too.
 
     def _split_call_in(expr: ast.AST, f_aliases: set, split_names: set):
         for node in ast.walk(expr):
@@ -518,6 +549,8 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
             fn = node.func
             if isinstance(fn, ast.Name) and fn.id in split_names:
                 return True
+            if isinstance(fn, ast.Attribute) and fn.attr in _TOKENIZERS:
+                return True  # e.g. textstats.whitespace_tokens(...)
             if isinstance(fn, ast.Attribute) and fn.attr == "split":
                 # <alias>.split(...) where alias binds the functions
                 # module, OR the fully-qualified Attribute chain
@@ -560,24 +593,7 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
             if not f.endswith(".py"):
                 continue
             tree = ast.parse(open(os.path.join(root, f)).read())
-            # module-level aliases of pyspark.sql.functions / its split
-            f_aliases, split_names = set(), set()
-            for node in ast.walk(tree):
-                if isinstance(node, ast.Import):
-                    for a in node.names:
-                        if a.name == "pyspark.sql.functions":
-                            f_aliases.add(a.asname or "pyspark")
-                elif isinstance(node, ast.ImportFrom):
-                    if node.module == "pyspark.sql":
-                        for a in node.names:
-                            if a.name == "functions":
-                                f_aliases.add(a.asname or "functions")
-                    elif node.module == "pyspark.sql.functions":
-                        for a in node.names:
-                            if a.name == "split":
-                                split_names.add(a.asname or "split")
-            if not f_aliases and not split_names:
-                continue
+            f_aliases, split_names = _spark_fn_aliases(tree)
             # scopes to scan: every (async) function body + the module
             scopes = [n for n in ast.walk(tree) if isinstance(
                 n, (ast.FunctionDef, ast.AsyncFunctionDef))] + [tree]
@@ -613,6 +629,41 @@ def test_no_split_expression_referenced_inside_hof_lambdas():
     assert not bad, (
         "split() expression referenced inside HOF lambda (re-evaluates "
         f"per element — stage it to a named column first): {bad}")
+
+
+def test_no_inline_whitespace_tokenizer_in_plans():
+    # F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "") is
+    # textstats.whitespace_tokens(F.lower(c)); the plans call the helper
+    # so the tokenizer has one definition (and the HOF lint above sees
+    # it). oov_rate's explode-then-filter-rows form is a different plan
+    # (no array filter) and is not matched.
+    def _fn_call(node, name, f_aliases):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == name
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id in f_aliases)
+
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "research_index_backend_spark", "plans")
+    bad = []
+    for f in sorted(os.listdir(root)):
+        if not f.endswith(".py"):
+            continue
+        tree = ast.parse(open(os.path.join(root, f)).read())
+        f_aliases, _ = _spark_fn_aliases(tree)
+        for node in ast.walk(tree):
+            if not (_fn_call(node, "filter", f_aliases) and node.args):
+                continue
+            sp = node.args[0]
+            if (_fn_call(sp, "split", f_aliases) and len(sp.args) >= 2
+                    and _fn_call(sp.args[0], "lower", f_aliases)
+                    and isinstance(sp.args[1], ast.Constant)
+                    and sp.args[1].value == r"\s+"):
+                bad.append(f"plans/{f}:{node.lineno}")
+    assert not bad, (
+        "inline whitespace tokenizer — call "
+        f"textstats.whitespace_tokens(F.lower(...)) instead: {bad}")
 
 
 def test_probe_lists_partition_catalog():

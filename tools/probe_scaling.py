@@ -114,7 +114,9 @@ def main() -> int:
     print(f"wrote {path}")
     for name, d in sorted(per_query.items(),
                           key=lambda kv: -(kv[1]["low_over_high"] or 0)):
-        print(f"{name:32s} c32={d['c32_sec']:8.2f} c8={d['c8_sec']:8.2f} "
+        print(f"{name:32s} "
+              f"c{CPUS_HIGH}={d[f'c{CPUS_HIGH}_sec']:8.2f} "
+              f"c{CPUS_LOW}={d[f'c{CPUS_LOW}_sec']:8.2f} "
               f"ratio={d['low_over_high']}")
     return 0
 
