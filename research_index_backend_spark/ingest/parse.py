@@ -8,18 +8,22 @@ splitting `$` or the surname field (parser.py:31-56), decomposes the
 publication date (parser.py:86-93), and dispatches resource_type on
 @schemeid (parser.py:150-163).
 
-Spark-first re-expression: the whole per-DOI loop is ONE lazy plan —
-explode(results) → explode(authors) → column-expression author parse →
-struct collect. Only two steps need Python (exact .title() and clean_html
-NFC/unescape), both Arrow-batched pandas UDFs. At 100 TB of landed JSONL
-this parses in parallel across executors with zero driver involvement;
-the explicit OPENAIRE_SCHEMA (schemas.py) lets the json scan prune to the
-dozen fields actually parsed.
+Spark-first re-expression: each parse function returns a lazy plan —
+explode(results) → explode(authors) → staged author parse (one projected
+column per step, _parse_author) → struct collect. Only two steps need
+Python (exact .title() and clean_html NFC/unescape), both Arrow-batched
+pandas UDFs. At 100 TB of landed JSONL this parses in parallel across
+executors with zero driver involvement; the explicit OPENAIRE_SCHEMA
+(schemas.py) lets the json scan prune to the dozen fields actually parsed.
+
+These functions do not materialize anything. The ingest pipeline
+(pipeline.build_graph_from_envelopes) materializes their outputs where
+several tables read them, so each batch is parsed once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.pytext import clean_html_udf, py_title_udf
@@ -35,82 +39,122 @@ def read_openaire_json(spark: SparkSession, path: str,
             .json(path, schema=OPENAIRE_SCHEMA))
 
 
-def _author_cols(a: Column) -> Column:
-    """parse_author (parser.py:11-70) as a single struct expression.
+def _parse_author(df: DataFrame, col: str) -> DataFrame:
+    """parse_author (parser.py:11-70) over the author struct column `col`.
 
-    Returns struct(first_name, last_name, orcid, rank) or NULL when the
-    reference would return None (unparseable name).
+    Returns df plus `p`: struct(first_name, last_name, orcid, rank). Rows
+    the reference would return None for (unparseable name) are dropped.
+
+    Each step is its own projected column, read by name in the next step,
+    so the plan grows linearly with the steps and each UDF is called once
+    per row. Written as one nested Column, every `when` branch would copy
+    the whole expression of its inputs again: the tree, and the UDF call
+    sites in it, would grow exponentially with the number of steps.
     """
-    # F7: pid→orcid coalesce (parser.py:18-22). NOTE the reference checks
-    # `if not orcid` (falsy: None or ""), mirrored via nullif('').
-    orcid_raw = F.coalesce(
-        F.nullif(a["orcid"], F.lit("")),
-        F.when(a["pid"]["id"]["scheme"].isin("orcid", "orcid_pending"),
-               a["pid"]["id"]["value"]),
-    )
-
-    # F3: .title() on name/surname, None treated as "" (parser.py:24-25)
-    first0 = py_title_udf(F.coalesce(a["name"], F.lit("")))
-    last0 = py_title_udf(F.coalesce(a["surname"], F.lit("")))
+    base = df.columns
+    a = F.col(col)
+    c = F.col
+    df = df.withColumns({
+        # F7: pid→orcid coalesce (parser.py:18-22). NOTE the reference
+        # checks `if not orcid` (falsy: None or ""), mirrored via nullif('').
+        "__a_orcid": F.coalesce(
+            F.nullif(a["orcid"], F.lit("")),
+            F.when(a["pid"]["id"]["scheme"].isin("orcid", "orcid_pending"),
+                   a["pid"]["id"]["value"]),
+        ),
+        # F3: .title() on name/surname, None treated as "" (parser.py:24-25)
+        "__a_first0": py_title_udf(F.coalesce(a["name"], F.lit(""))),
+        "__a_last0": py_title_udf(F.coalesce(a["surname"], F.lit(""))),
+        # legacy `$` full name as whitespace tokens (used by F5a below)
+        "__a_dtoks": F.filter(F.split(F.coalesce(a["$"], F.lit("")), r"\s+"),
+                              lambda t: t != ""),
+    })
+    first0, last0 = c("__a_first0"), c("__a_last0")
 
     # F4: mutual-substring repair (parser.py:26-29). Python's `x in y` is
     # True for x == "", where replace(y, "", "") is a no-op but the
     # trailing .strip() still runs — so the empty-substring branch must
     # trim too (round-2 ADVICE: ' Ab Cd ' with an empty twin is stripped
     # by the reference). A non-empty non-contained twin takes NO strip.
-    last1 = (F.when((first0 != "") & F.contains(last0, first0),
-                    F.trim(F.replace(last0, first0, F.lit(""))))
-             .when(first0 == "", F.trim(last0))
-             .otherwise(last0))
-    first1 = (F.when((last1 != "") & F.contains(first0, last1),
-                     F.trim(F.replace(first0, last1, F.lit(""))))
-              .when(last1 == "", F.trim(first0))
-              .otherwise(first0))
+    df = df.withColumn(
+        "__a_last1",
+        F.when((first0 != "") & F.contains(last0, first0),
+               F.trim(F.replace(last0, first0, F.lit(""))))
+        .when(first0 == "", F.trim(last0))
+        .otherwise(last0))
+    last1 = c("__a_last1")
+    df = df.withColumn(
+        "__a_first1",
+        F.when((last1 != "") & F.contains(first0, last1),
+               F.trim(F.replace(first0, last1, F.lit(""))))
+        .when(last1 == "", F.trim(first0))
+        .otherwise(first0))
+    first1 = c("__a_first1")
 
     # F5a: legacy `$` full-name split — only when both names empty
     # (parser.py:31-39); exactly-2-token split, else unparseable.
-    dollar_toks = F.split(F.coalesce(a["$"], F.lit("")), r"\s+")
-    dollar_toks = F.filter(dollar_toks, lambda t: t != "")
-    use_dollar = (first1 == "") & (last1 == "") & (F.size(dollar_toks) > 0)
-    first2 = F.when(use_dollar,
-                    F.when(F.size(dollar_toks) == 2, F.element_at(dollar_toks, 1))
-                    .otherwise(F.lit(None))).otherwise(first1)
-    last2 = F.when(use_dollar,
-                   F.when(F.size(dollar_toks) == 2, F.element_at(dollar_toks, 2))
-                   .otherwise(F.lit(None))).otherwise(last1)
+    dtoks = c("__a_dtoks")
+    use_dollar = (first1 == "") & (last1 == "") & (F.size(dtoks) > 0)
+    df = df.withColumns({
+        "__a_first2": F.when(
+            use_dollar,
+            F.when(F.size(dtoks) == 2, F.element_at(dtoks, 1))
+            .otherwise(F.lit(None))).otherwise(first1),
+        "__a_last2": F.when(
+            use_dollar,
+            F.when(F.size(dtoks) == 2, F.element_at(dtoks, 2))
+            .otherwise(F.lit(None))).otherwise(last1),
+    })
+    first2, last2 = c("__a_first2"), c("__a_last2")
 
     # F5b: surname-only fallback (parser.py:40-56): clean_html, split on
     # narrow-NBSP U+202F, else on single space; 2 toks → (first, last),
     # >2 → (first, rest joined), 1 → unparseable.
-    need_split = last2.isNotNull() & (last2 != "") & \
-        (first2.isNull() | (first2 == ""))
-    cleaned = clean_html_udf(last2)
+    df = df.withColumns({
+        "__a_cleaned": clean_html_udf(last2),
+        "__a_need_split": last2.isNotNull() & (last2 != "")
+        & (first2.isNull() | (first2 == "")),
+    })
+    cleaned = c("__a_cleaned")
     nbsp_toks = F.split(cleaned, " ")
-    sp_toks = F.split(cleaned, " ")
-    toks = F.when(F.size(nbsp_toks) == 1, sp_toks).otherwise(nbsp_toks)
-    first3 = F.when(
-        need_split,
-        F.when(F.size(toks) >= 2, F.element_at(toks, 1)).otherwise(F.lit(None)),
-    ).otherwise(first2)
-    last3 = F.when(
-        need_split,
-        F.when(F.size(toks) == 2, F.element_at(toks, 2))
-        .when(F.size(toks) > 2, F.array_join(F.slice(toks, 2, 100000), " "))
-        .otherwise(F.lit(None)),
-    ).otherwise(last2)
+    df = df.withColumn(
+        "__a_toks",
+        F.when(F.size(nbsp_toks) == 1, F.split(cleaned, " "))
+        .otherwise(nbsp_toks))
+    toks, need_split = c("__a_toks"), c("__a_need_split")
+    df = df.withColumns({
+        "__a_first3": F.when(
+            need_split,
+            F.when(F.size(toks) >= 2, F.element_at(toks, 1))
+            .otherwise(F.lit(None)),
+        ).otherwise(first2),
+        "__a_last3": F.when(
+            need_split,
+            F.when(F.size(toks) == 2, F.element_at(toks, 2))
+            .when(F.size(toks) > 2,
+                  F.array_join(F.slice(toks, 2, 100000), " "))
+            .otherwise(F.lit(None)),
+        ).otherwise(last2),
+    })
+    first3, last3 = c("__a_first3"), c("__a_last3")
 
-    rank = F.coalesce(a["rank"].cast("int"), F.lit(1))
-    # F6: ORCID URL format (parser.py:66)
-    orcid = F.when(orcid_raw.isNotNull(),
-                   F.concat(F.lit("https://orcid.org/"), orcid_raw))
-
+    orcid_raw = c("__a_orcid")
     ok = first3.isNotNull() & (first3 != "") & last3.isNotNull() & (last3 != "")
-    return F.when(ok, F.struct(
+    parsed = F.when(ok, F.struct(
         first3.alias("first_name"),
         last3.alias("last_name"),
-        orcid.alias("orcid"),
-        rank.alias("rank"),
+        # F6: ORCID URL format (parser.py:66)
+        F.when(orcid_raw.isNotNull(),
+               F.concat(F.lit("https://orcid.org/"), orcid_raw))
+        .alias("orcid"),
+        F.coalesce(a["rank"].cast("int"), F.lit(1)).alias("rank"),
     ))
+    # Unparseable rows drop out of an explode of the 0/1-element array, not
+    # out of a filter on `p`: Catalyst pushes a filter down through every
+    # step above, inlining each step's expression into the predicate and
+    # calling the UDFs a second time to evaluate it.
+    df = df.withColumn("p", F.explode(F.array_compact(F.array(parsed))))
+    return df.drop(*[n for n in df.columns if n not in base and n != "p"])
 
 
 def _explode_results(envelopes: DataFrame) -> DataFrame:
@@ -133,11 +177,7 @@ def parse_authors(envelopes: DataFrame) -> DataFrame:
         "doi", "result_idx",
         F.posexplode_outer(F.col("r")["authors"]).alias("author_pos", "a"),
     )
-    parsed = rows.select(
-        "doi", "result_idx", "author_pos",
-        _author_cols(F.col("a")).alias("p"),
-    ).filter(F.col("p").isNotNull())
-    return parsed.select(
+    return _parse_author(rows, "a").select(
         "doi", "result_idx", "author_pos",
         F.col("p.first_name").alias("first_name"),
         F.col("p.last_name").alias("last_name"),
@@ -162,7 +202,7 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
     attributes as @keys, text as $) predates the Graph API the reference's
     parser.py consumes; the reference exercises it via its zenodo fixture.
     Creators are adapted onto the v2 author struct so the full parse_author
-    cascade (_author_cols: pid/orcid coalesce, .title(), mutual-substring
+    cascade (_parse_author: pid/orcid coalesce, .title(), mutual-substring
     repair, $-fallback split) applies unchanged — one behavior, two
     envelope dialects.
     """
@@ -213,7 +253,7 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
         r["creator"].alias("creators"),
     )
     # Adapt v1 creator attrs onto the v2 author struct (@orcid wins over
-    # @orcid_pending, matching the pid-scheme precedence in _author_cols).
+    # @orcid_pending, matching the pid-scheme precedence in _parse_author).
     pid_t = ("struct<id:struct<scheme:string,value:string>,"
              "provenance:string>")
     exploded = arts.select(
@@ -221,9 +261,9 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
         F.posexplode_outer("creators").alias("author_pos", "c"),
     )
     c = F.col("c")
-    adapted = exploded.select(
+    adapted = _parse_author(exploded.select(
         "env_id", "result_idx", "author_pos",
-        _author_cols(F.struct(
+        F.struct(
             c["@name"].alias("name"),
             c["@surname"].alias("surname"),
             F.coalesce(F.nullif(c["@orcid"], F.lit("")),
@@ -232,8 +272,8 @@ def parse_zenodo_v1(envelopes: DataFrame) -> DataFrame:
             c["@rank"].alias("rank"),
             F.lit(None).cast(pid_t).alias("pid"),
             c["$"].alias("$"),
-        )).alias("p"),
-    ).filter(F.col("p").isNotNull())
+        ).alias("a"),
+    ), "a")
     grouped = (
         adapted.groupBy("env_id", "result_idx")
         .agg(F.sort_array(F.collect_list(F.struct(

@@ -138,8 +138,15 @@ def build_graph_from_envelopes(envelopes: DataFrame,
                                upsert_mode: str = "insert",
                                ) -> dict[str, DataFrame]:
     """Entry point 1's per-DOI loop (reference create_graph_from_doi.py:195-256)
-    as ONE composed plan: parse -> OpenAlex enrich -> resolve authors ->
-    upsert nodes -> author_of edges -> refers_to country tagging.
+    set-at-a-time: parse -> OpenAlex enrich -> resolve authors -> upsert
+    nodes -> author_of edges -> refers_to country tagging.
+
+    Three frames are materialized here with localCheckpoint: the parsed
+    authors (`flat`), their resolution (`resolved`) and the merged
+    `outputs` table. Every returned table is derived from them —
+    authors and author_of from `resolved`, author_of and refers_to from
+    `outputs` — so without them each table's plan would parse the
+    envelopes and resolve the authors again.
 
     envelopes: OPENAIRE_SCHEMA frames with query_doi set (landed JSONL).
     existing_authors/_outputs: current graph node tables (may be empty).
@@ -181,7 +188,8 @@ def build_graph_from_envelopes(envelopes: DataFrame,
         F.lit(None).cast("map<int,int>").alias("counts_by_year"))
     # upsert_mode="update" is the -u flag: re-ingested DOIs REPLACE their
     # existing rows instead of being dropped by the match-before-create
-    outputs = upsert(existing_outputs, outputs_new, ["doi"], mode=upsert_mode)
+    outputs = upsert(existing_outputs, outputs_new, ["doi"],
+                     mode=upsert_mode).localCheckpoint()
 
     # key includes result_idx: an envelope with multiple results has
     # independent author lists, and (doi, author_pos) alone would collide
@@ -189,8 +197,10 @@ def build_graph_from_envelopes(envelopes: DataFrame,
     flat = parse_authors(envelopes).withColumn(
         "in_id", F.concat_ws("#", "doi",
                              F.col("result_idx").cast("string"),
-                             F.col("author_pos").cast("string")))
-    resolved = resolve_authors(flat, existing_authors, exact=exact_names)
+                             F.col("author_pos").cast("string"))
+    ).localCheckpoint()
+    resolved = resolve_authors(flat, existing_authors,
+                               exact=exact_names).localCheckpoint()
     created = (
         resolved.filter(F.col("resolution") == "created")
         .select(F.col("resolved_uuid").alias("uuid"),
@@ -210,20 +220,18 @@ def build_graph_from_envelopes(envelopes: DataFrame,
 
     tables = {"authors": authors, "outputs": outputs, "author_of": author_of}
     if countries is not None:
-        # J6+J7: case-sensitive CONTAINS, as the Cypher original — TWO
-        # passes, abstract and title (the reference runs two statements,
-        # create_graph_from_doi.py:294-329); union + distinct, then the
-        # guard drops already-linked pairs. Both passes are one broadcast
-        # nested-loop join each over the same outputs scan.
+        # J6+J7: case-sensitive CONTAINS, as the Cypher original, on the
+        # abstract OR the title (the reference runs two statements,
+        # create_graph_from_doi.py:294-329, whose edges MERGE into one
+        # set): one broadcast nested-loop join, then the guard drops
+        # already-linked pairs. Output uuids and country ids are keys, so
+        # every pair comes out once.
         dim = countries.select(F.col("id").alias("country_id"), "name")
-        tagged = None
-        for text_col in ("abstract", "title"):
-            t = contains_tag(
-                outputs.select(F.col("uuid").alias("output_uuid"), text_col),
-                dim, text_col, "name", case_insensitive=False)
-            t = t.select("output_uuid", "country_id")
-            tagged = t if tagged is None else tagged.unionByName(t)
-        refers_to = tagged.distinct()
+        refers_to = contains_tag(
+            outputs.select(F.col("uuid").alias("output_uuid"),
+                           "abstract", "title"),
+            dim, ("abstract", "title"), "name", case_insensitive=False,
+        ).select("output_uuid", "country_id")
         if existing_refers_to is not None:
             refers_to = refers_to.join(existing_refers_to,
                                        ["output_uuid", "country_id"],

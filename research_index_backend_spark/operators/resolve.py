@@ -81,8 +81,7 @@ def resolve_authors(incoming: DataFrame, existing: DataFrame,
               F.col("orcid") == F.col("__ex_orcid"), "inner")
         .withColumn("__score", score_fn(F.col("__ex_full"), F.col("__full")))
         .withColumn("__rn", F.row_number().over(
-            _per_row_window(incoming, [F.col("__score").desc(),
-                                       F.col("__ex_uuid")])))
+            _per_row_window([F.col("__score").desc(), F.col("__ex_uuid")])))
         .filter((F.col("__rn") == 1) & (F.col("__score") >= threshold))
         .select("in_id", F.col("__ex_uuid").alias("orcid_uuid"))
     )
@@ -123,6 +122,6 @@ def resolve_authors(incoming: DataFrame, existing: DataFrame,
     return out.drop("orcid_uuid", "name_uuid", "__full", "__key")
 
 
-def _per_row_window(incoming: DataFrame, order: list[Column]):
+def _per_row_window(order: list[Column]):
     from pyspark.sql import Window
     return Window.partitionBy("in_id").orderBy(*order)

@@ -20,19 +20,29 @@ SURVEY.md §4.3 as the stretch rewrite).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def contains_tag(big: DataFrame, dim: DataFrame, text_col: str, term_col: str,
+def contains_tag(big: DataFrame, dim: DataFrame,
+                 text_col: str | tuple[str, ...], term_col: str,
                  existing: DataFrame | None = None,
                  case_insensitive: bool = True) -> DataFrame:
     """Tag rows of `big` with every `dim` term contained in `big[text_col]`.
+
+    text_col may be a tuple of columns: a term then tags a row when ANY of
+    them contains it (the OR of the per-column predicates), in one
+    nested-loop join — the same pairs as one pass per column, unioned and
+    deduplicated, without the second join.
 
     Returns big's columns + the matching term rows. If `existing` is given
     (same join columns), already-present pairs are anti-joined away —
     Cypher's `AND NOT exists((o)-[:refers_to]->(c))` guard.
     """
+    cols = (text_col,) if isinstance(text_col, str) else tuple(text_col)
     if case_insensitive:
         # Hoist the lower() into per-row projections on BOTH sides. Inside a
         # BroadcastNestedLoopJoin the condition is evaluated once per
@@ -52,19 +62,26 @@ def contains_tag(big: DataFrame, dim: DataFrame, text_col: str, term_col: str,
         # IsNotNull(text). Value-identical: inner-join contains() never
         # matches a NULL side, and with the filter in place the coalesce
         # arm is dead — it exists only to carry the non-nullable type.
-        big = (big.filter(F.col(text_col).isNotNull())
-               .withColumn("__contains_text_lc",
-                           F.lower(F.coalesce(F.col(text_col), F.lit("")))))
+        #
+        # With several columns the filter keeps rows where any of them is
+        # set; a NULL one lowers to '', which contains only the empty term —
+        # and that term is contained by the row's non-NULL column too. The
+        # first column keeps the one-column name, so that plan is unchanged.
+        lc = [f"__contains_text_lc{i or ''}" for i in range(len(cols))]
+        big = (big.filter(reduce(or_, [F.col(c).isNotNull() for c in cols]))
+               .withColumns({n: F.lower(F.coalesce(F.col(c), F.lit("")))
+                             for n, c in zip(lc, cols)}))
         dim = (dim.filter(F.col(term_col).isNotNull())
                .withColumn("__contains_term_lc",
                            F.lower(F.coalesce(F.col(term_col), F.lit("")))))
-        pred = F.contains(F.col("__contains_text_lc"),
-                          F.col("__contains_term_lc"))
+        pred = reduce(or_, [F.contains(F.col(n), F.col("__contains_term_lc"))
+                            for n in lc])
     else:
-        pred = F.contains(F.col(text_col), F.col(term_col))
+        pred = reduce(or_, [F.contains(F.col(c), F.col(term_col))
+                            for c in cols])
     tagged = big.join(F.broadcast(dim), on=pred, how="inner")
     if case_insensitive:
-        tagged = tagged.drop("__contains_text_lc", "__contains_term_lc")
+        tagged = tagged.drop(*lc, "__contains_term_lc")
     if existing is not None:
         tagged = tagged.join(existing, on=list(existing.columns), how="left_anti")
     return tagged

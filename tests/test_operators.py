@@ -622,3 +622,33 @@ class TestBucketedJoin:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
             spark.sql("DROP TABLE IF EXISTS t_bkt_orders")
             spark.sql("DROP TABLE IF EXISTS t_bkt_lines")
+
+
+class TestContainsTagColumns:
+    """contains_tag over a tuple of text columns: the pairs of one pass per
+    column, unioned and deduplicated, from one nested-loop join."""
+
+    ROWS = [(1, "Energy in Kenya", None), (2, None, "A Ghana study"),
+            (3, "kenya and ghana", "Kenya"), (4, None, None), (5, "", "x")]
+    TERMS = [("KEN", "Kenya"), ("GHA", "Ghana"), ("NIL", "")]
+
+    @pytest.mark.parametrize("case_insensitive", [False, True])
+    def test_tuple_equals_union_of_single_passes(self, spark,
+                                                 case_insensitive):
+        from research_index_backend_spark.operators.theta import contains_tag
+        big = spark.createDataFrame(self.ROWS, "id int, a string, b string")
+        dim = spark.createDataFrame(self.TERMS, "cid string, name string")
+
+        def pairs(text_col):
+            df = contains_tag(big, dim, text_col, "name",
+                              case_insensitive=case_insensitive)
+            assert list(df.columns) == ["id", "a", "b", "cid", "name"]
+            return [(r["id"], r["cid"]) for r in df.collect()]
+
+        got = pairs(("a", "b"))
+        assert len(got) == len(set(got))
+        assert set(got) == set(pairs("a")) | set(pairs("b"))
+        plan = contains_tag(big, dim, ("a", "b"), "name",
+                            case_insensitive=case_insensitive
+                            )._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastNestedLoopJoin") == 1
