@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest.fetch import Transport, fetch_metadata
-from .ingest.pipeline import build_graph_from_envelopes, ingestion_metrics
+from .ingest.pipeline import (
+    build_graph_from_envelopes,
+    ingestion_metrics,
+    processed_predicate,
+)
 from .schemas import (
     AUTHOR_NODE,
     AUTHOR_OF_EDGE,
@@ -100,7 +104,6 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     outputs0 = _read_table(spark, data_dir, "outputs")
     authors0 = _read_table(spark, data_dir, "authors")
     countries = _read_table(spark, data_dir, "countries")
-    refers0 = _read_table(spark, data_dir, "refers_to")
 
     # J1 existence probe against the outputs table
     tracker = (
@@ -111,11 +114,10 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
         .withColumn("already_exists", F.coalesce("already_exists",
                                                  F.lit(False)))
     )
-    processed_pred = (F.col("valid_pattern") if update_metadata
-                      else F.col("valid_pattern") & ~F.col("already_exists"))
     # partition count is the fetch-concurrency knob (ingest/fetch.py): one
     # HTTP call per row inside each task, tasks run in parallel
-    work = (tracker.filter(processed_pred).select("doi")
+    work = (tracker.filter(processed_predicate(update_metadata))
+            .select("doi")
             .repartition(spark.sparkContext.defaultParallelism))
 
     # the HTTP boundary (S3/S4) — both sources fetched set-at-a-time
@@ -147,9 +149,7 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     )
     mode = "update" if update_metadata else "insert"
     graph = build_graph_from_envelopes(
-        envelopes, authors0, outputs0,
-        countries=countries if not _empty(countries) else None,
-        existing_refers_to=refers0 if not _empty(refers0) else None,
+        envelopes, authors0, outputs0, countries=countries,
         openalex_landed=landed_alex, upsert_mode=mode)
 
     # the 14-metric tracker state (A3)
@@ -183,19 +183,13 @@ def run_ingest(spark: SparkSession, doi_file: str, data_dir: str,
     full = full.localCheckpoint()
 
     from .operators.upsert import upsert_parquet
-    # graph tables already merge existing + new; the disk upsert re-merges
-    # against the same on-disk state, which is an idempotent no-op
-    upsert_parquet(spark, graph["outputs"], str(Path(data_dir) / "outputs"),
-                   ["doi"], mode=mode)
-    upsert_parquet(spark, graph["authors"], str(Path(data_dir) / "authors"),
-                   ["uuid"])
-    upsert_parquet(spark, graph["author_of"],
-                   str(Path(data_dir) / "author_of"),
-                   ["author_uuid", "output_uuid"])
-    if "refers_to" in graph:
-        upsert_parquet(spark, graph["refers_to"],
-                       str(Path(data_dir) / "refers_to"),
-                       ["output_uuid", "country_id"])
+    # the graph holds this batch's rows; each keyed upsert is the one
+    # merge with the table on disk (match-then-create, or replace with -u)
+    for table, keys in (("outputs", ["doi"]), ("authors", ["uuid"]),
+                        ("author_of", ["author_uuid", "output_uuid"]),
+                        ("refers_to", ["output_uuid", "country_id"])):
+        upsert_parquet(spark, graph[table], str(Path(data_dir) / table),
+                       keys, mode=mode if table == "outputs" else "insert")
 
     metrics = ingestion_metrics(full, update_metadata=update_metadata,
                                 start_time=start, end_time=time.time())
@@ -228,10 +222,6 @@ def processing_details(full: DataFrame,
                                         F.col("doi").cast("string"))
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def _empty(df: DataFrame) -> bool:
-    return df.isEmpty()
 
 
 def argument_parser() -> argparse.ArgumentParser:

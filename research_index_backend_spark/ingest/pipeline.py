@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.names import full_name_col, split_names_cols
@@ -132,37 +132,36 @@ def build_graph_from_envelopes(envelopes: DataFrame,
                                existing_authors: DataFrame,
                                existing_outputs: DataFrame,
                                countries: DataFrame | None = None,
-                               existing_refers_to: DataFrame | None = None,
-                               exact_names: bool = True,
                                openalex_landed: DataFrame | None = None,
                                upsert_mode: str = "insert",
                                ) -> dict[str, DataFrame]:
     """Entry point 1's per-DOI loop (reference create_graph_from_doi.py:195-256)
-    set-at-a-time: parse -> OpenAlex enrich -> resolve authors -> upsert
-    nodes -> author_of edges -> refers_to country tagging.
+    set-at-a-time: parse -> OpenAlex enrich -> resolve authors -> author_of
+    edges -> refers_to country tagging.
 
-    Three frames are materialized here with localCheckpoint: the parsed
-    authors (`flat`), their resolution (`resolved`) and the merged
-    `outputs` table. Every returned table is derived from them —
-    authors and author_of from `resolved`, author_of and refers_to from
-    `outputs` — so without them each table's plan would parse the
-    envelopes and resolve the authors again.
+    Returns this batch's rows per table: the parsed `outputs`, the
+    `authors` resolution created, the `author_of` edges and the
+    `refers_to` tags. The caller's keyed upsert into each table
+    (operators.upsert, the reference's match-then-create) is the only
+    merge. Three frames are materialized with localCheckpoint — the
+    batch's `outputs`, the parsed authors (`flat`) and their resolution
+    (`resolved`) — and every returned table is derived from them, so no
+    table's plan parses the envelopes or resolves the authors again.
 
     envelopes: OPENAIRE_SCHEMA frames with query_doi set (landed JSONL).
     existing_authors/_outputs: current graph node tables (may be empty).
-    countries: country nodes for the J6/J7 tagging pass (optional).
+    countries: country nodes for J6 tagging; without them no `refers_to`.
     openalex_landed: FETCH_SCHEMA rows from the openalex source; every
     article is enriched with `openalex` id + `cited_by_count`
     (reference parser.py:183-186) via a doi left join — a missing/errored
     response leaves nulls, the reference's `{"id": None}` except-branch.
-    counts_by_year stays null for reference parity (parser.py:188 passes
-    None; parse.parse_openalex exposes the parsed map for users who want
-    the real thing).
+    counts_by_year stays null for reference parity (parser.py:188).
 
-    Output uuids are minted as sha2(doi) — deterministic, so re-ingesting
-    the same DOI is a no-op through the doi-keyed upsert (the reference's
-    match_doi-before-CREATE, models.py:165-249). exact_names=True scores
-    author verification with the reference difflib algorithm.
+    Output uuids are sha2(doi), and author_of takes its output_uuid from
+    the same expression; re-ingesting a DOI is a no-op through the
+    doi-keyed upsert (the reference's match_doi-before-CREATE,
+    models.py:165-249). Author names verify with the reference difflib
+    algorithm.
     """
     from ..operators.resolve import resolve_authors
     from ..operators.theta import contains_tag
@@ -180,16 +179,13 @@ def build_graph_from_envelopes(envelopes: DataFrame,
                     .withColumn("cited_by_count", F.lit(None).cast("int")))
     # full OUTPUT_NODE column set, in schema order — no drift between the
     # declared node schema and what the pipeline materializes
-    outputs_new = articles.select(
+    outputs = articles.select(
         "uuid", "doi", "title", "abstract", "journal", "issue", "volume",
         "publication_year", "publication_month", "publication_day",
         "publisher", "result_type", "resource_type",
         "openalex", "cited_by_count", "cited_by_count_date",
-        F.lit(None).cast("map<int,int>").alias("counts_by_year"))
-    # upsert_mode="update" is the -u flag: re-ingested DOIs REPLACE their
-    # existing rows instead of being dropped by the match-before-create
-    outputs = upsert(existing_outputs, outputs_new, ["doi"],
-                     mode=upsert_mode).localCheckpoint()
+        F.lit(None).cast("map<int,int>").alias("counts_by_year"),
+    ).localCheckpoint()
 
     # key includes result_idx: an envelope with multiple results has
     # independent author lists, and (doi, author_pos) alone would collide
@@ -200,44 +196,44 @@ def build_graph_from_envelopes(envelopes: DataFrame,
                              F.col("author_pos").cast("string"))
     ).localCheckpoint()
     resolved = resolve_authors(flat, existing_authors,
-                               exact=exact_names).localCheckpoint()
-    created = (
-        resolved.filter(F.col("resolution") == "created")
-        .select(F.col("resolved_uuid").alias("uuid"),
-                "first_name", "last_name", "orcid",
-                F.lit(None).cast("string").alias("openalex"),
-                F.lit(None).cast("int").alias("rank"))
-    )
-    authors = upsert(existing_authors, created, ["uuid"])
-
-    author_of = (
-        resolved
-        .join(outputs.select("doi", F.col("uuid").alias("output_uuid")), "doi")
-        .select(F.col("resolved_uuid").alias("author_uuid"),
-                "output_uuid", "rank")
-        .distinct()
-    )
-
-    tables = {"authors": authors, "outputs": outputs, "author_of": author_of}
+                               exact=True).localCheckpoint()
+    tables = {
+        "outputs": outputs,
+        "authors": resolved.filter(F.col("resolution") == "created").select(
+            F.col("resolved_uuid").alias("uuid"),
+            "first_name", "last_name", "orcid",
+            F.lit(None).cast("string").alias("openalex"),
+            F.lit(None).cast("int").alias("rank")),
+        "author_of": resolved.select(
+            F.col("resolved_uuid").alias("author_uuid"),
+            F.sha2(F.col("doi"), 256).alias("output_uuid"),
+            "rank").distinct(),
+    }
     if countries is not None:
-        # J6+J7: case-sensitive CONTAINS, as the Cypher original, on the
-        # abstract OR the title (the reference runs two statements,
-        # create_graph_from_doi.py:294-329, whose edges MERGE into one
-        # set): one broadcast nested-loop join, then the guard drops
-        # already-linked pairs. Output uuids and country ids are keys, so
-        # every pair comes out once.
-        dim = countries.select(F.col("id").alias("country_id"), "name")
-        refers_to = contains_tag(
-            outputs.select(F.col("uuid").alias("output_uuid"),
-                           "abstract", "title"),
-            dim, ("abstract", "title"), "name", case_insensitive=False,
+        # J6: case-sensitive CONTAINS, as the Cypher original, on the
+        # abstract OR the title (the reference's two statements,
+        # create_graph_from_doi.py:294-329) in one nested-loop join over
+        # every output of the graph's next state (-u: re-ingested rows
+        # replace theirs), not only the batch. The sink's keyed insert is
+        # the J7 "not already linked" guard.
+        merged = upsert(existing_outputs, outputs, ["doi"], mode=upsert_mode)
+        tables["refers_to"] = contains_tag(
+            merged.select(F.col("uuid").alias("output_uuid"),
+                          "abstract", "title"),
+            countries.select(F.col("id").alias("country_id"), "name"),
+            ("abstract", "title"), "name", case_insensitive=False,
         ).select("output_uuid", "country_id")
-        if existing_refers_to is not None:
-            refers_to = refers_to.join(existing_refers_to,
-                                       ["output_uuid", "country_id"],
-                                       "left_anti")
-        tables["refers_to"] = refers_to
     return tables
+
+
+def processed_predicate(update_metadata: bool = False) -> Column:
+    """The DOIs a run fetches and ingests: the valid new ones, or with -u
+    every valid one (the reference re-processes existing DOIs,
+    doi.py:219-224). run_ingest, ingestion_metrics and
+    cli.processing_details all use it, so the printed counts and the
+    per-DOI lists agree."""
+    valid = F.col("valid_pattern")
+    return valid if update_metadata else valid & ~F.col("already_exists")
 
 
 def ingestion_metrics(tracker: DataFrame, update_metadata: bool = False,
@@ -252,8 +248,7 @@ def ingestion_metrics(tracker: DataFrame, update_metadata: bool = False,
     Returns a 1-row frame; total_time_seconds is driver-side wall clock
     (the only non-distributed metric, as in the reference).
     """
-    processed = (F.col("valid_pattern") if update_metadata
-                 else F.col("valid_pattern") & ~F.col("already_exists"))
+    processed = processed_predicate(update_metadata)
     conds = {
         "duplicated_submissions": F.col("n_submitted") > 1,
         "processed_dois": processed,

@@ -70,9 +70,10 @@ class TestGraphBuild:
         g2 = build_graph_from_envelopes(envelopes, g1["authors"],
                                         g1["outputs"])
         assert g2["outputs"].count() == 1
-        assert g2["authors"].count() == 1
-        # the known author resolves (matched, not re-created) and the edge
-        # set stays identical
+        # the builder returns the batch's rows: the known author resolves
+        # (matched, not re-created), so no author row comes back, and the
+        # edge set stays identical
+        assert g2["authors"].count() == 0
         assert g2["author_of"].count() == 1
         assert (g1["outputs"].select("uuid").collect()
                 == g2["outputs"].select("uuid").collect())
